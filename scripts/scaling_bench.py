@@ -62,6 +62,18 @@ def corpus_path(n_convs: int) -> str:
 
 RUNS_PER_LEVEL = 2
 
+# A leg that starts on a busy box is tagged ``loaded``: the 1-min loadavg
+# per core above this is co-tenant noise the leg's wall absorbs. Same
+# threshold as the benchmark's (perfbench/run.py LOAD_TAG_PER_CORE).
+LOAD_TAG_PER_CORE = 0.5
+
+
+def load_at_start() -> dict:
+    load = os.getloadavg()[0]
+    nproc = len(os.sched_getaffinity(0))
+    return {"load_at_start": load,
+            "loaded": load > LOAD_TAG_PER_CORE * nproc}
+
 
 def worker(cpus: int, n_convs: int) -> None:
     # Shuffle partitions scale with the "cluster" (as a real N-vs-4N
@@ -106,13 +118,12 @@ def worker(cpus: int, n_convs: int) -> None:
     warm._sefs_unpersist()
     out = f"/tmp/scale_ix_{cpus}"
     shutil.rmtree(out, ignore_errors=True)
-    mode = os.environ.get("SEFS_SEGMENT_MODE", "local")
+    load = load_at_start()
     t0 = time.time()
-    build_index(spark, corpus, out, fields=("body",), n_buckets=32,
-                segment_mode=mode)
+    build_index(spark, corpus, out, fields=("body",), n_buckets=32)
     dt = time.time() - t0
     print(json.dumps({"cpus": cpus, "seconds": round(dt, 2),
-                      "turns": n_turns, "segment_mode": mode,
+                      "turns": n_turns, **load,
                       "turns_per_sec": round(n_turns / dt, 1)}))
 
 
@@ -330,7 +341,8 @@ def _best_run(cpus: int, n_convs: int) -> dict:
         line = [l for l in p.stdout.splitlines() if l.startswith("{")][-1]
         r = json.loads(line)
         print(f"local[{cpus}] @{n_convs}convs run {run}: {r['seconds']}s "
-              f"({r['turns_per_sec']} turns/s)", flush=True)
+              f"({r['turns_per_sec']} turns/s)"
+              + (" LOADED" if r["loaded"] else ""), flush=True)
         if best is None or r["seconds"] < best["seconds"]:
             best = r
     return best
@@ -472,6 +484,7 @@ def submit_leg(n_exec: int, n_convs: int, zpath: str,
     cmd = _submit_cmd(n_exec, n_convs, zpath, out)
     last_err = None
     for _ in range(attempt_retries + 1):
+        load = load_at_start()
         p = subprocess.run(cmd, capture_output=True, text=True, env=env,
                            timeout=7200)
         lines = [l for l in p.stdout.splitlines()
@@ -482,6 +495,7 @@ def submit_leg(n_exec: int, n_convs: int, zpath: str,
                 if l.startswith("build_index phases:"):
                     r["phases"] = json.loads(l.split(":", 1)[1])
             r["n_executors"] = n_exec
+            r.update(load)
             return r
         last_err = (p.stdout + p.stderr)[-4000:]
         shutil.rmtree(out, ignore_errors=True)
@@ -504,14 +518,15 @@ def orchestrate_cluster() -> None:
     pairs = []
     best_s = best_b = None
     for i in range(n_pairs):
-        load = open("/proc/loadavg").read().split()[0]
         rb = submit_leg(big, n_convs, zpath)
         rs = submit_leg(small, n_convs, zpath)
         eff = round(rb["turns_per_sec"] / (ratio * rs["turns_per_sec"]), 3)
-        print(f"pair {i} (load {load}): {big}exec {rb['seconds']}s "
+        loaded = rb["loaded"] or rs["loaded"]
+        print(f"pair {i} (load {rb['load_at_start']}/{rs['load_at_start']}"
+              f"{', LOADED' if loaded else ''}): {big}exec {rb['seconds']}s "
               f"({rb['turns_per_sec']} t/s) / {small}exec {rs['seconds']}s "
               f"({rs['turns_per_sec']} t/s) -> eff {eff}", flush=True)
-        pairs.append({"load_at_start": float(load),
+        pairs.append({"loaded": loaded,
                       f"{big}_exec": rb, f"{small}_exec": rs,
                       "pair_efficiency": eff})
         if best_b is None or rb["seconds"] < best_b["seconds"]:

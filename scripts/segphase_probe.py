@@ -20,8 +20,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from search_engine_framework_spark.index.build import (  # noqa: E402
     _dir_bytes,
     _tune_encode_partitions,
-    build_segments_local_df,
+    build_segments,
     encode_subsegments,
+    write_segments,
 )
 from search_engine_framework_spark.session import get_spark  # noqa: E402
 
@@ -46,7 +47,7 @@ def main() -> None:
     out["encode_only"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    build_segments_local_df(postings).write.format("noop").mode(
+    build_segments(postings).write.format("noop").mode(
         "overwrite"
     ).save()
     out["encode_merge"] = round(time.time() - t0, 2)
@@ -54,13 +55,7 @@ def main() -> None:
     dst = f"/tmp/segprobe_out_{cores}"
     shutil.rmtree(dst, ignore_errors=True)
     t0 = time.time()
-    (
-        build_segments_local_df(postings)
-        .sortWithinPartitions("term", "field")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(dst)
-    )
+    write_segments(build_segments(postings), dst)
     out["full_write"] = round(time.time() - t0, 2)
     print("SEGPROBE " + json.dumps(out), flush=True)
     spark.stop()

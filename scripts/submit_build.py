@@ -57,7 +57,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--buckets", type=int, default=256,
                     help="segment hash-buckets (≈ 2-4× executor count)")
     ap.add_argument("--salts", type=int, default=16,
-                    help="doc-range salts per term (head-term skew split)")
+                    help="merge groups per term (head-term skew split)")
     ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--no-resume", action="store_true",
                     help="ignore existing checkpoint manifests")

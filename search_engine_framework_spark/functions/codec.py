@@ -209,58 +209,6 @@ def encode_pos_blob(positions) -> bytes:
     return bytes(out)
 
 
-def encode_blocks_from_blobs(
-    doc_ids,
-    tfs,
-    doclens,
-    pos_blobs,
-    block_size: int = BLOCK_SIZE,
-) -> list[Block]:
-    """Encode docid-ascending postings whose positions are ALREADY
-    per-posting ``poss`` fragments (``encode_pos_blob``) into fixed-size
-    blocks: gap/tf/doclen streams are single vectorized NumPy passes; the
-    ``poss`` stream is a bytes join — no position re-encoding."""
-    d = np.asarray(doc_ids, dtype=np.int64)
-    n = d.size
-    if n == 0:
-        return []
-    tf_arr = np.asarray(tfs, dtype=np.int64)
-    dl_arr = np.asarray(doclens, dtype=np.int64)
-
-    block_starts = np.arange(0, n, block_size, dtype=np.int64)
-    n_blocks = len(block_starts)
-
-    # doc gaps, reset to 0 at every block start
-    gaps = np.empty(n, dtype=np.int64)
-    gaps[0] = 0
-    gaps[1:] = d[1:] - d[:-1]
-    gaps[block_starts] = 0
-
-    bounds = np.append(block_starts, n)
-    docs_parts = _split_encoded(gaps.astype(np.uint64), bounds)
-    tfs_parts = _split_encoded(tf_arr.astype(np.uint64), bounds)
-    dls_parts = _split_encoded(dl_arr.astype(np.uint64), bounds)
-
-    block_max_tf = np.maximum.reduceat(tf_arr, block_starts)
-    blocks = []
-    for i in range(n_blocks):
-        s = int(block_starts[i])
-        e = int(bounds[i + 1])
-        blocks.append(
-            Block(
-                first_doc=int(d[s]),
-                last_doc=int(d[e - 1]),
-                n=e - s,
-                max_tf=int(block_max_tf[i]),
-                docs=docs_parts[i],
-                tfs=tfs_parts[i],
-                doclens=dls_parts[i],
-                poss=b"".join(pos_blobs[s:e]),
-            )
-        )
-    return blocks
-
-
 def encode_blocks_from_blob_stream(
     doc_ids,
     tfs,
@@ -269,12 +217,12 @@ def encode_blocks_from_blob_stream(
     blob_offsets: np.ndarray,
     block_size: int = BLOCK_SIZE,
 ) -> list[Block]:
-    """Like ``encode_blocks_from_blobs`` but the per-posting ``poss``
-    fragments live CONTIGUOUSLY (already in posting order) in one byte
-    buffer with an offsets array — the Arrow BinaryArray layout. A block's
-    ``poss`` stream is then a single buffer slice instead of a Python-level
-    ``b"".join`` over per-row bytes objects (the join was the last
-    per-posting Python object left in the encode path)."""
+    """Encode docid-ascending postings into fixed-size blocks. The
+    per-posting ``poss`` fragments (``encode_pos_blob``) live CONTIGUOUSLY,
+    in posting order, in one byte buffer with an offsets array — the Arrow
+    BinaryArray layout. Gap/tf/doclen streams are single vectorized NumPy
+    passes, and a block's ``poss`` stream is a single buffer slice — no
+    position re-encoding and no per-posting Python objects."""
     d = np.asarray(doc_ids, dtype=np.int64)
     n = d.size
     if n == 0:
@@ -323,11 +271,15 @@ def encode_blocks(
     block_size: int = BLOCK_SIZE,
 ) -> list[Block]:
     """Encode docid-ascending postings (positions as int lists) into
-    fixed-size blocks. Thin wrapper over ``encode_blocks_from_blobs`` —
-    identical byte format either way."""
+    fixed-size blocks. Thin wrapper over ``encode_blocks_from_blob_stream``
+    — identical byte format either way."""
     blobs = [encode_pos_blob(p) for p in positions]
-    return encode_blocks_from_blobs(
-        doc_ids, tfs, doclens, blobs, block_size=block_size
+    offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=offsets[1:])
+    return encode_blocks_from_blob_stream(
+        doc_ids, tfs, doclens,
+        np.frombuffer(b"".join(blobs), dtype=np.uint8), offsets,
+        block_size=block_size,
     )
 
 
@@ -404,17 +356,6 @@ def decode_block_arrays(block) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.n
         offs[gt] = flat[seg_starts[gt] - 1]
         flat = flat - np.repeat(offs, counts[nz])
     return doc_ids, tfs, doclens, counts, flat
-
-
-def merge_block_runs(runs: list[list[Block]]) -> list[Block]:
-    """Merge salt sub-segment block runs whose doc ranges are disjoint and
-    ordered (range-salted builds guarantee this): concatenation, no decode."""
-    flat = [b for run in runs for b in run]
-    flat.sort(key=lambda b: b.first_doc)
-    for i in range(1, len(flat)):
-        if flat[i].first_doc <= flat[i - 1].last_doc:
-            raise ValueError("merge_block_runs: overlapping doc ranges")
-    return flat
 
 
 def bm25_block_upper_bound(max_tf: int, idf: float, k1: float, b: float) -> float:

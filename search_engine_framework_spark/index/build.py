@@ -1,23 +1,25 @@
 """Distributed inverted-index build.
 
 Pipeline (all DataFrame ops; the only Python crossings are the tokenizer
-pandas UDF and the posting-block encoder pandas UDF):
+and the two Arrow segment stages):
 
   transcripts ──assign_doc_ids──▶ docs(doc_id, ext_id, field texts)
-      │ tokenize_udf (per-doc, map-side term grouping — no token shuffle;
-      ▼  positions pre-encoded as varint blobs)
+      │ tokenize (mapInArrow; per-doc, map-side term grouping — no token
+      ▼  shuffle; positions pre-encoded as varint blobs)
   doc_terms(term, field, doc_id, tf, pos_blob, doclen)   [forward index]
-      │ DEFAULT "local" mode: mapInPandas per-partition encode — zero
-      │ posting shuffle; each partition emits per-term block runs
-      │ (doc-range salts == input partitions, skew-immune).
-      │ "shuffle" mode: range-salt on doc_id + groupBy(term, field, salt)
-      ▼ applyInPandas encode (globally ordered blocks).
-  sub-segments(term, field, salt, df, ctf, blocks)
-      │ groupBy(term, field): ordered block-run concat — the distributed
-      ▼ segment-merge stage (north_rule); only block rows shuffle.
+      │ encode_subsegments: mapInArrow per-partition encode — zero
+      ▼ posting shuffle; each partition emits per-term block runs.
+  sub-segments(term, field, df, ctf, blocks)
+      │ merge_subsegments: salt = hash(first_doc) % n_salts, ONE shuffle
+      │ on (bucket, salt), Arrow block-run concat per (term, field, salt)
+      ▼ — the distributed segment-merge stage; only block rows shuffle.
   segments — Parquet partitioned by bucket = pmod(xxhash64(term,field), B),
              sorted by (term, field) within files → row-group pruning on
              term equality predicates.
+
+This is the ONLY segment writer: appends encode a generation's forward
+index through the same two stages, and compaction re-runs the merge stage
+over the existing segment rows (streaming/incremental.py).
 
 Side tables: docmap (doc_id ↔ ext_id/conv/turn), doclen(doc_id, field, len),
 stats (N, per-field token totals). Per-bucket JSON manifests record lineage
@@ -37,12 +39,10 @@ import time
 from dataclasses import dataclass
 from collections.abc import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.analyzer import AnalyzerConfig
-from ..functions.codec import encode_blocks_from_blobs
 from .docids import assign_doc_ids
 
 SEGMENT_SCHEMA = (
@@ -249,93 +249,13 @@ def extract_postings(
     )
 
 
-def build_segments_df(
-    postings: DataFrame,
-    n_docs: int,
-    n_buckets: int = 32,
-    n_salts: int = 8,
-    block_size: int = 128,
-    doc_lo: int = 0,
-) -> DataFrame:
-    """postings → merged segment rows (one per term+field).
-
-    Salting: salt = floor((doc_id − doc_lo) · n_salts / (n_docs − doc_lo))
-    splits every term's postings into ≤ n_salts doc-range sub-groups,
-    bounding the largest shuffle group a head term can produce. Because
-    ranges are ordered and disjoint, the merge stage is a cheap ordered
-    concat of encoded block runs — no decode, no re-sort. ``doc_lo`` > 0 is
-    the incremental-append case (streaming/incremental.py): the batch only
-    covers [doc_lo, n_docs), so salt over that range.
-    """
-    n_docs = max(doc_lo + 1, n_docs)
-    postings = postings.where(F.col("term").isNotNull())  # drop doclen markers
-    salted = postings.withColumn(
-        "salt",
-        F.least(
-            F.lit(n_salts - 1),
-            (
-                (F.col("doc_id") - F.lit(doc_lo)) * n_salts
-                / F.lit(n_docs - doc_lo)
-            ).cast("int"),
-        ),
-    )
-
-    def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        blocks = encode_blocks_from_blobs(
-            pdf["doc_id"].to_numpy(),
-            pdf["tf"].to_numpy(),
-            pdf["doclen"].to_numpy(),
-            pdf["pos_blob"].to_list(),
-            block_size=block_size,
-        )
-        return pd.DataFrame(
-            {
-                "bucket": [0],
-                "term": [pdf["term"].iloc[0]],
-                "field": [pdf["field"].iloc[0]],
-                "salt": [int(pdf["salt"].iloc[0])],
-                "df": [len(pdf)],
-                "ctf": [int(pdf["tf"].sum())],
-                "max_tf": [int(pdf["tf"].max())],
-                "blocks": [[b.__dict__ for b in blocks]],
-            }
-        )
-
-    subsegs = (
-        salted.groupBy("term", "field", "salt")
-        .applyInPandas(encode_group, schema=SEGMENT_SCHEMA)
-    )
-
-    # Segment-merge stage: ordered concat of salt runs. sort_array on
-    # struct array orders by first field (first_doc) — ranges are disjoint
-    # so this is the correct global order.
-    merged = (
-        subsegs.groupBy("term", "field")
-        .agg(
-            F.sum("df").alias("df"),
-            F.sum("ctf").alias("ctf"),
-            F.max("max_tf").alias("max_tf"),
-            F.sort_array(F.flatten(F.collect_list("blocks"))).alias("blocks"),
-        )
-        .withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("term"), F.col("field")), F.lit(n_buckets)).cast("int"),
-        )
-        .withColumn("salt", F.lit(-1))
-        .select(
-            "bucket", "term", "field", "salt", "df", "ctf", "max_tf", "blocks"
-        )
-    )
-    return merged
-
-
 def encode_subsegments(
     postings: DataFrame,
     block_size: int = 128,
 ) -> DataFrame:
-    """Partition-local index build + block-level merge (the
-    Lucene/Anserini-style architecture; the scale path).
+    """Partition-local index build, the first stage of the segment writer
+    (the Lucene/Anserini-style architecture; ``merge_subsegments`` is the
+    second).
 
     Each input partition accumulates its rows per (term, field) — one
     pandas groupby per Arrow batch — then sorts each term's postings by
@@ -356,10 +276,10 @@ def encode_subsegments(
     order-independent (joins/groupBys over decoded rows), so this only
     affects cosmetic segment ordering, not results.
 
-    Trade-offs vs ``build_segments_df``: mid/tail terms produce one short
-    block per partition (~20 bytes overhead per partition a term appears
-    in); size input files (``spark.sql.files.maxPartitionBytes``) so a
-    partition's raw postings fit executor-python memory.
+    Trade-off: mid/tail terms produce one short block per partition (~20
+    bytes overhead per partition a term appears in); size input files
+    (``spark.sql.files.maxPartitionBytes``) so a partition's raw postings
+    fit executor-python memory.
     """
 
     def encode_partition(batches) -> Iterator:
@@ -517,39 +437,31 @@ def _merge_partition(batches) -> "Iterator":
     )
 
 
-def build_segments_local_df(
-    postings: DataFrame,
-    n_buckets: int = 32,
-    block_size: int = 128,
-    merge_groups: int = 8,
-    merge_partitions: int | None = None,
+def merge_subsegments(
+    subsegs: DataFrame, n_buckets: int = 32, n_salts: int = 8
 ) -> DataFrame:
-    """Partition-local encode (``encode_subsegments``) + the distributed
-    segment-merge stage, with HEAD-TERM SKEW bounded by merge groups.
+    """The distributed segment-merge stage, with HEAD-TERM SKEW bounded by
+    ``n_salts``. Input: any segment-shaped rows — fresh sub-segments from
+    ``encode_subsegments`` (build, append) or the live segment table
+    (compaction).
 
     A naive merge to one row per (term, field) funnels a head term's
     entire posting list — ~12% of ALL postings for a Zipf rank-1 term —
     through ONE reduce task and ONE output row: a fixed-wall-clock
     straggler that caps N→4N scaling (and an unboundedly large row at
-    10^12 turns). Instead, each sub-segment row is assigned a
-    content-derived merge group (hash of its first block's first_doc);
-    merging groups by (term, field, group): a head term becomes
-    ``merge_groups`` balanced rows; queries already handle multiple
-    segment rows per (term, field) (incremental generations produce the
-    same shape). Raise ``merge_groups`` with corpus size so row payloads
-    stay bounded.
+    10^12 turns). Instead, each input row is assigned a content-derived
+    salt (hash of its first block's first_doc) and rows merge by (term,
+    field, salt): a head term becomes ≤ ``n_salts`` balanced rows; queries
+    already handle multiple segment rows per (term, field) (incremental
+    generations produce the same shape). Raise ``n_salts`` with corpus
+    size so row payloads stay bounded.
 
     Physical shape: ONE shuffle, hash-partitioned by (bucket, salt) —
     which co-locates every (term, field, salt) group — then an Arrow-side
-    per-partition merge (``_merge_partition``), and the caller writes the
-    result WITHOUT re-shuffling (partitionBy routes rows to bucket
-    directories from whichever task holds them). The previous shape paid
-    two full shuffles of the index bytes (groupBy merge + write
-    repartition) plus JVM collect_list garbage."""
-    spark = postings.sparkSession
-    par = max(1, spark.sparkContext.defaultParallelism)
-    nmp = merge_partitions or max(n_buckets, 4 * par)
-    subsegs = encode_subsegments(postings, block_size=block_size)
+    per-partition merge (``_merge_partition``); ``write_segments`` writes
+    the result WITHOUT re-shuffling (partitionBy routes rows to bucket
+    directories from whichever task holds them)."""
+    par = max(1, subsegs.sparkSession.sparkContext.defaultParallelism)
     tagged = subsegs.select(
         F.pmod(F.xxhash64(F.col("term"), F.col("field")), F.lit(n_buckets))
         .cast("int")
@@ -558,7 +470,7 @@ def build_segments_local_df(
         "field",
         F.pmod(
             F.xxhash64(F.element_at("blocks", 1)["first_doc"]),
-            F.lit(merge_groups),
+            F.lit(n_salts),
         )
         .cast("int")
         .alias("salt"),
@@ -567,8 +479,32 @@ def build_segments_local_df(
         "max_tf",
         "blocks",
     )
-    return tagged.repartition(nmp, "bucket", "salt").mapInArrow(
-        _merge_partition, schema=SEGMENT_SCHEMA
+    return tagged.repartition(
+        max(n_buckets, 4 * par), "bucket", "salt"
+    ).mapInArrow(_merge_partition, schema=SEGMENT_SCHEMA)
+
+
+def build_segments(
+    postings: DataFrame,
+    n_buckets: int = 32,
+    block_size: int = 128,
+    n_salts: int = 8,
+) -> DataFrame:
+    """Forward-index rows → merged segment rows: partition-local encode
+    (``encode_subsegments``) + the merge stage (``merge_subsegments``)."""
+    return merge_subsegments(
+        encode_subsegments(postings, block_size=block_size),
+        n_buckets=n_buckets, n_salts=n_salts,
+    )
+
+
+def write_segments(segments: DataFrame, path: str) -> None:
+    """Bucket-partitioned parquet, (term, field)-sorted within files."""
+    (
+        segments.sortWithinPartitions("term", "field")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(path)
     )
 
 
@@ -637,7 +573,6 @@ def build_index(
     n_salts: int = 8,
     block_size: int = 128,
     resume: bool = True,
-    segment_mode: str = "auto",
 ) -> IndexPaths:
     """Full index build with per-bucket checkpoint manifests.
 
@@ -646,13 +581,12 @@ def build_index(
     is deterministic (data-derived docids + lexicographic term sort), which
     the resume test verifies via content hashes.
 
-    ``segment_mode``: ``"local"`` (default, also ``"auto"``) —
-    partition-local encode + block-level merge, no posting shuffle;
-    ``"shuffle"`` — term-salted posting shuffle producing globally
-    docid-ordered, range-disjoint blocks per segment row. Both produce the
-    same logical segment table (identical decoded postings and query
-    results); block boundaries differ (local mode fragments tail-term
-    blocks at partition edges).
+    Layout settings, all recorded in the bucket-manifest lineage and
+    adopted from there by appends, compaction, purge and merge:
+    ``n_buckets`` (segment directories = the query-side bucket prune),
+    ``n_salts`` (merge groups: a (term, field) spans at most ``n_salts``
+    segment rows per generation — the head-term split, see
+    ``merge_subsegments``) and ``block_size`` (postings per block).
     """
     paths = IndexPaths(out_dir)
     os.makedirs(paths.manifests, exist_ok=True)
@@ -727,8 +661,7 @@ def build_index(
             spark, paths, postings_path=paths.doc_terms,
             n_docs=n_docs, base_done=base_done, base_manifest=base_manifest,
             fields=fields, cfg=cfg, n_buckets=n_buckets, n_salts=n_salts,
-            block_size=block_size, resume=resume, segment_mode=segment_mode,
-            t0=t0, phases=phases,
+            block_size=block_size, resume=resume, t0=t0, phases=phases,
         )
     finally:
         # Release the assignment's persisted conv stats even on failure —
@@ -847,7 +780,6 @@ def _build_index_body(
     n_salts: int,
     block_size: int,
     resume: bool,
-    segment_mode: str,
     t0: float,
     phases: dict[str, float] | None = None,
     max_doc: int | None = None,
@@ -888,37 +820,18 @@ def _build_index_body(
             )
 
     done = _completed_buckets(paths) if resume else set()
-    use_local = segment_mode in ("local", "auto")
-    if use_local:
-        segments = build_segments_local_df(
-            postings, n_buckets=n_buckets, block_size=block_size
-        )
-    else:
-        segments = build_segments_df(
-            postings, n_docs, n_buckets=n_buckets, n_salts=n_salts,
-            block_size=block_size,
-        )
+    segments = build_segments(
+        postings, n_buckets=n_buckets, block_size=block_size, n_salts=n_salts
+    )
     if done:
         segments = segments.where(~F.col("bucket").isin(sorted(done)))
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # Local mode arrives already hash-partitioned by (bucket, salt) from
-    # the merge shuffle — write it as-is: partitionBy routes rows to their
-    # bucket DIRECTORY from whichever task holds them, so the head-term
-    # bucket (~12% of all bytes under Zipf) is written by several balanced
-    # tasks and the index bytes shuffle exactly ONCE end-to-end. Shuffle
-    # mode (globally ordered blocks) still needs its own spread.
-    if not use_local:
-        par_w = max(1, spark.sparkContext.defaultParallelism)
-        segments = segments.repartition(
-            max(n_buckets, 4 * par_w), "bucket", "salt"
-        )
-    (
-        segments.sortWithinPartitions("term", "field")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(paths.segments)
-    )
+    # The merge shuffle already hash-partitioned the rows by (bucket,
+    # salt), so the head-term bucket (~12% of all bytes under Zipf) is
+    # written by several balanced tasks and the index bytes shuffle
+    # exactly ONCE end-to-end.
+    write_segments(segments, paths.segments)
 
     _mark("segments")
     elapsed = time.time() - t0
@@ -967,7 +880,6 @@ def _build_index_body(
             "lineage": {
                 "n_buckets": n_buckets,
                 "n_salts": n_salts,
-                "segment_mode": "local" if use_local else "shuffle",
                 "block_size": block_size,
                 "analyzer": (cfg or AnalyzerConfig.reference()).__dict__
                 if cfg is None or hasattr(cfg, "__dict__")

@@ -155,7 +155,6 @@ def recover_purge(paths: IndexPaths | str) -> None:
 def purge_deletes(
     spark: SparkSession,
     out_dir: str,
-    segment_mode: str | None = None,
 ) -> dict:
     """Physically remove all tombstoned docs; returns
     ``{"purged": n, "remaining": live_docs}``.
@@ -247,7 +246,6 @@ def purge_deletes(
         n_salts=int(lin.get("n_salts") or 8),
         block_size=int(lin.get("block_size") or 128),
         resume=True,
-        segment_mode=segment_mode or lin.get("segment_mode") or "local",
     )
     # Carry over tombstones written AFTER the snapshot (concurrent
     # delete_docs during the rebuild): they stay pending in the new root.

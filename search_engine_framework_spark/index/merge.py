@@ -12,7 +12,7 @@ on-disk index with
   simply never enter the merged index (Lucene's expungeDeletes), so the
   merged index starts with zero pending deletes and id-space gaps where
   deleted docs were (already the engine's post-purge invariant),
-* segments re-encoded through the standard build body
+* segments re-encoded through the build's single segment writer
   (:func:`..index.build._build_index_body`) from the UNION of the
   sources' forward indexes — no re-tokenization (the forward index
   already holds analyzed terms + position blobs), so the expensive
@@ -70,11 +70,10 @@ def merge_indexes(
     spark: SparkSession,
     sources: list[str | IndexPaths],
     out_dir: str,
-    segment_mode: str = "auto",
 ) -> IndexPaths:
     """Merge ``sources`` (≥ 1 index paths) into a fresh index at
-    ``out_dir``. Bucket/salt/block-size/analyzer parameters are taken
-    from the FIRST source's lineage (all sources must share the
+    ``out_dir``. ``n_buckets``/``n_salts``/``block_size``/analyzer are
+    taken from the FIRST source's lineage (all sources must share the
     analyzer; layout parameters may differ — the merge re-buckets).
     Returns the merged index's paths.
     """
@@ -168,7 +167,6 @@ def merge_indexes(
             n_salts=int(lin0.get("n_salts", 8)),
             block_size=int(lin0.get("block_size", 128)),
             resume=False,
-            segment_mode=segment_mode,
             t0=t0,
             # threaded straight into collection_stats: stats.json is
             # born with the merged id-space high-water mark, so there

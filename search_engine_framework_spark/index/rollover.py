@@ -124,10 +124,7 @@ class RolloverIndex:
                 n_salts=self.n_salts,
             )
             return gen
-        append_index(
-            self.spark, transcripts, active,
-            n_salts=self.n_salts,
-        )
+        append_index(self.spark, transcripts, active)
         return active
 
     # -- reads -----------------------------------------------------------------

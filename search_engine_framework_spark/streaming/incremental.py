@@ -14,12 +14,17 @@ Lucene index. The Spark-native extension for a living transcript corpus
   immediately — a (term, field) may now have one segment row per
   generation; ``IndexReader.term_stats`` sums them and posting decode is
   row-wise, so no query-side special casing.
-* ``compact_index`` — the segment-merge stage across generations: since
-  each generation covers a disjoint, increasing doc_id range, merging is
-  the same ordered block-run concat the salted build merge uses — no
-  decode, no re-sort.
+* ``compact_index`` — the segment-merge stage across generations: the
+  build's own merge stage (index/build.py ``merge_subsegments``) re-run
+  over every generation's segment rows — an ordered block-run concat per
+  (term, field, salt), no decode, no re-sort.
 * ``stream_index`` — Structured Streaming driver: ``foreachBatch`` over a
   transcript stream, each micro-batch appended as one generation.
+
+Appends and compaction write segments through the build's single segment
+writer, with the layout (``n_buckets``, ``n_salts``, ``block_size``)
+adopted from the base build's lineage, so every generation and every
+compaction has the base build's shape.
 
 Crash safety (the generation commit protocol): every append first writes
 the whole generation to a staging directory, then records an
@@ -48,9 +53,14 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.analyzer import AnalyzerConfig
 from ..index.build import (
     IndexPaths,
+    _dir_bytes,
+    _restore_conf,
+    _tune_encode_partitions,
     build_index,
-    build_segments_df,
+    build_segments,
     extract_postings,
+    merge_subsegments,
+    write_segments,
 )
 from ..index.docids import assign_doc_ids
 
@@ -197,17 +207,23 @@ def reconcile_index(paths: IndexPaths | str) -> None:
             os.remove(mpath)
 
 
-def _lineage_n_buckets(paths: IndexPaths) -> int | None:
-    """The base build's bucket count from its manifests. The segment
+def _lineage_n_buckets(lin: dict, n_buckets: int | None, verb: str) -> int:
+    """The base build's bucket count from its lineage. The segment
     layout's bucket column AND query-time bucket pruning both derive from
     pmod(xxhash64(term, field), n_buckets) — a generation appended with a
     different count would land postings in directories the pruned scan
-    never opens (silent data loss), so appends/compactions must use the
-    recorded value, never an independent parameter."""
-    from ..index.reader import read_index_lineage
-
-    nb = read_index_lineage(paths).get("n_buckets")
-    return int(nb) if nb else None
+    never opens (silent data loss), so appends/compactions use the
+    recorded value, and a conflicting explicit one raises."""
+    recorded = int(lin["n_buckets"]) if lin.get("n_buckets") else None
+    if n_buckets is None:
+        return recorded or 32
+    if recorded and n_buckets != recorded:
+        raise ValueError(
+            f"n_buckets={n_buckets} conflicts with the index's recorded "
+            f"bucket count {recorded}; {verb} postings would be "
+            "invisible to the bucket-pruned scan"
+        )
+    return n_buckets
 
 
 def append_index(
@@ -217,8 +233,6 @@ def append_index(
     fields: tuple[str, ...] | None = None,
     cfg: AnalyzerConfig | None = None,
     n_buckets: int | None = None,
-    n_salts: int = 8,
-    block_size: int = 128,
 ) -> int:
     """Append a batch of new turns to an existing index; returns the number
     of turns actually indexed (rows whose (conv_id, turn_idx) already exist
@@ -230,22 +244,15 @@ def append_index(
     conflicting value raises. A generation tokenized with a different
     analyzer (or missing a field) would be silently unsearchable — queries
     adopt the RECORDED analyzer at engine open, so appended postings
-    stemmed differently never match."""
+    stemmed differently never match. ``n_salts`` and ``block_size`` are
+    always the recorded values: the generation's segment rows come from
+    the build's own encode + merge (index/build.py ``build_segments``)."""
     from ..index.reader import read_index_lineage
 
     paths = IndexPaths(out_dir)
     reconcile_index(paths)  # finish any interrupted predecessor first
     lin = read_index_lineage(paths)
-    recorded_nb = lin.get("n_buckets")
-    recorded_nb = int(recorded_nb) if recorded_nb else None
-    if n_buckets is None:
-        n_buckets = recorded_nb or 32
-    elif recorded_nb and n_buckets != recorded_nb:
-        raise ValueError(
-            f"n_buckets={n_buckets} conflicts with the index's recorded "
-            f"bucket count {recorded_nb}; appended postings would be "
-            "invisible to the bucket-pruned scan"
-        )
+    n_buckets = _lineage_n_buckets(lin, n_buckets, "appended")
     recorded_cfg = AnalyzerConfig.from_lineage(lin)
     if cfg is None:
         cfg = recorded_cfg  # None-on-None → build default, same as base
@@ -353,20 +360,26 @@ def append_index(
     doclen.write.mode("overwrite").parquet(os.path.join(staging, "doclen"))
     doclen = spark.read.parquet(os.path.join(staging, "doclen"))
 
-    # New generation's segment rows: same encode + salted merge as the base
-    # build, salt ranges scoped to THIS generation's doc range (doc_lo) so a
-    # head term in the delta still splits across all n_salts groups.
-    seg = build_segments_df(
-        delta, base_n + n_new, n_buckets=n_buckets, n_salts=n_salts,
-        block_size=block_size, doc_lo=base_n,
-    )
-    (
-        seg.repartition(n_buckets, "bucket")
-        .sortWithinPartitions("term", "field")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(staging, "segments"))
-    )
+    # New generation's segment rows: the base build's encode + merge with
+    # its recorded layout, and its encode-scan split size (bounded
+    # executor-python memory per task, see _tune_encode_partitions).
+    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
+    try:
+        _tune_encode_partitions(
+            spark, _dir_bytes(os.path.join(staging, "doc_terms")),
+            max(1, spark.sparkContext.defaultParallelism),
+        )
+        write_segments(
+            build_segments(
+                delta,
+                n_buckets=n_buckets,
+                block_size=int(lin.get("block_size") or 128),
+                n_salts=int(lin.get("n_salts") or 8),
+            ),
+            os.path.join(staging, "segments"),
+        )
+    finally:
+        _restore_conf(spark, "spark.sql.files.maxPartitionBytes", old_mpb)
 
     # Post-publish collection stats, computed BEFORE publishing so the
     # incomplete manifest carries both sides of the transition.
@@ -418,14 +431,11 @@ def compact_index(
     spark: SparkSession,
     out_dir: str,
     n_buckets: int | None = None,
-    merge_groups: int = 8,
 ) -> None:
-    """Merge all generations' segment rows per (term, field, merge group)
-    — ordered block-run concat (generations cover disjoint increasing doc
-    ranges, so sort_array on (first_doc, ...) structs restores docid order
-    without decoding). Merge groups bound head-term reduce/row size
-    exactly as in the base build (index/build.py
-    build_segments_local_df docstring).
+    """Merge all generations' segment rows per (term, field, salt): the
+    build's merge stage (index/build.py ``merge_subsegments``) over the
+    live segment table — an ordered block-run concat, no decode. The salt
+    bounds a head term to ≤ ``n_salts`` rows exactly as in the base build.
 
     Swap protocol: write compacted segments to ``segments.compacting``,
     rename live → ``segments.old``, rename compacted into place, delete
@@ -435,57 +445,27 @@ def compact_index(
 
     ``n_buckets`` defaults to the index's recorded bucket count (see
     ``_lineage_n_buckets``); a conflicting explicit value raises.
+    ``n_salts`` is always the recorded value.
 
     Orthogonal to deletes: compaction merges generation block runs
     without decoding, so tombstoned docs (index/deletes.py) survive it —
     doc_ids are unchanged, the tombstone set stays valid, and queries
     keep masking. Physical removal is ``purge_deletes``."""
+    from ..index.reader import read_index_lineage
+
     paths = IndexPaths(out_dir)
     recover_compaction(paths)
-    recorded_nb = _lineage_n_buckets(paths)
-    if n_buckets is None:
-        n_buckets = recorded_nb or 32
-    elif recorded_nb and n_buckets != recorded_nb:
-        raise ValueError(
-            f"n_buckets={n_buckets} conflicts with the index's recorded "
-            f"bucket count {recorded_nb}; compacted postings would be "
-            "invisible to the bucket-pruned scan"
-        )
-    seg = spark.read.parquet(paths.segments)
-    mgroup = F.pmod(
-        F.xxhash64(F.element_at("blocks", 1)["first_doc"]),
-        F.lit(merge_groups),
-    ).cast("int")
-    merged = (
-        seg.withColumn("mgroup", mgroup)
-        .groupBy("term", "field", "mgroup")
-        .agg(
-            F.sum("df").alias("df"),
-            F.sum("ctf").alias("ctf"),
-            F.max("max_tf").alias("max_tf"),
-            F.sort_array(F.flatten(F.collect_list("blocks"))).alias("blocks"),
-        )
-        .withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("term"), F.col("field")), F.lit(n_buckets)).cast("int"),
-        )
-        .select(
-            "bucket", "term", "field",
-            F.col("mgroup").alias("salt"),
-            "df", "ctf", "max_tf", "blocks",
-        )
+    lin = read_index_lineage(paths)
+    n_buckets = _lineage_n_buckets(lin, n_buckets, "compacted")
+    merged = merge_subsegments(
+        spark.read.parquet(paths.segments),
+        n_buckets=n_buckets,
+        n_salts=int(lin.get("n_salts") or 8),
     )
     tmp = paths.segments + ".compacting"
     backup = paths.segments + ".old"
     _rmtree(tmp)
-    par_w = max(1, spark.sparkContext.defaultParallelism)
-    (
-        merged.repartition(max(n_buckets, 4 * par_w), "bucket", "salt")
-        .sortWithinPartitions("term", "field")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
-    )
+    write_segments(merged, tmp)
     # recover_compaction's roll-forward keys on the _SUCCESS marker; if a
     # foreign conf suppressed it, fail BEFORE touching the live dir.
     if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
@@ -524,9 +504,11 @@ def stream_index(
     currently available and stops (periodic-batch deployment shape).
 
     ``build_kwargs`` may carry options for either callee (e.g.
-    ``segment_mode``/``resume`` for the bootstrap ``build_index``,
-    ``n_salts`` for ``append_index``); each call receives only the keys its
-    signature accepts.
+    ``n_salts``/``block_size``/``resume`` for the bootstrap
+    ``build_index``); each call receives only the keys its signature
+    accepts. Later batches' appends adopt the bootstrap build's recorded
+    layout, so ``n_buckets``/``n_salts``/``block_size`` passed here shape
+    every generation.
     """
     paths = IndexPaths(out_dir)
 

@@ -7,7 +7,6 @@ from search_engine_framework_spark.functions.codec import (
     bm25_block_upper_bound,
     decode_block,
     encode_blocks,
-    merge_block_runs,
     varint_decode,
     varint_encode,
 )
@@ -46,22 +45,6 @@ def test_block_max_metadata():
     assert blocks[0].max_tf == 9
     ub = bm25_block_upper_bound(9, idf=2.0, k1=1.2, b=0.75)
     assert ub == 2.0 * 9 / (9 + 1.2 * 0.25)
-
-
-def test_merge_block_runs_ordered_concat():
-    a = encode_blocks([1, 5], [1, 1], [3, 3], [[0], [0]])
-    b = encode_blocks([9, 12], [1, 1], [3, 3], [[0], [0]])
-    merged = merge_block_runs([[b[0]], [a[0]]])
-    assert [blk.first_doc for blk in merged] == [1, 9]
-
-
-def test_merge_rejects_overlap():
-    a = encode_blocks([1, 5], [1, 1], [3, 3], [[0], [0]])
-    b = encode_blocks([4, 12], [1, 1], [3, 3], [[0], [0]])
-    import pytest
-
-    with pytest.raises(ValueError):
-        merge_block_runs([[a[0]], [b[0]]])
 
 
 def test_dict_shaped_block_decodes():

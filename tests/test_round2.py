@@ -417,7 +417,7 @@ def test_append_crash_is_reconciled(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(incremental, "_publish_staged", exploding_publish)
     with pytest.raises(RuntimeError, match="simulated crash"):
         incremental.append_index(spark, delta, out, fields=("body",),
-                                 n_buckets=4, n_salts=2)
+                                 n_buckets=4)
     monkeypatch.setattr(incremental, "_publish_staged", real_publish)
 
     # stats untouched by the failed publish
@@ -426,7 +426,7 @@ def test_append_crash_is_reconciled(spark, tmp_path, monkeypatch):
     # a later append first reconciles the orphaned generation, then
     # appends nothing new (same batch) — the index ends consistent
     n2 = incremental.append_index(spark, delta, out, fields=("body",),
-                                  n_buckets=4, n_salts=2)
+                                  n_buckets=4)
     assert n2 == 0  # reconcile published the staged generation first
     with open(os.path.join(out, "stats.json")) as fh:
         stats = json.load(fh)
